@@ -530,7 +530,7 @@ def write_quantized_partitions(
     consistent-absence too."""
     suffix = f"/batch={batch_id}" if batch_id is not None else ""
     if mode == "overwrite" and batch_id is None:
-        from ..streaming.fsio import fs_delete, fs_exists
+        from ..fsio import fs_delete, fs_exists
 
         spark = df.sparkSession
         if fs_exists(spark, f"{root}/codes"):
@@ -1032,7 +1032,7 @@ def load_ivf_centroids(
 def _ivf_quantized(spark, index_path: str) -> bool:
     """Whether an IVF index uses the quantized two-table layout (legacy
     indexes predate the ``_params`` side table → float layout)."""
-    from ..streaming.fsio import fs_exists
+    from ..fsio import fs_exists
 
     path = index_path + "_params"
     if not fs_exists(spark, path):

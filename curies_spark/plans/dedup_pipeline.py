@@ -41,12 +41,11 @@ pipeline's shard resume).
 
 from __future__ import annotations
 
-import json
 import time
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..fsio import fs_exists, fs_write_json
 from ..operators.dedup import (
     BAND_SIZE,
     N_PERM,
@@ -54,6 +53,7 @@ from ..operators.dedup import (
     minhash_signature_col,
 )
 from ..operators.text import quality_features, quality_score_col
+from .pipeline import write_counted
 
 __all__ = [
     "band_keys",
@@ -230,8 +230,6 @@ def dedup_components_frame(
     resumable job adds materialization and a manifest, nothing
     semantic); the DuckDB oracle is
     plans/demo_training.oracle_dedup_survivors_sql."""
-    from ..operators.dedup import connected_components
-
     staged = stage_documents(docs, text=text, id_col=id_col, k=k)
     winners = staged.groupBy("content_hash").agg(F.min(id_col).alias(id_col))
     staged_winners = staged.join(
@@ -285,13 +283,12 @@ def run_dedup_pipeline(
     min_est_jaccard: float = 0.5,
     resume: bool = True,
 ) -> "dict":
-    """Run the full dedup pipeline; returns the manifest dict."""
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
+    """Run the full dedup pipeline; returns the manifest dict. Its
+    counts come from the writes (:func:`write_counted`) and one
+    aggregate over the persisted winners — never from a read-back."""
     t0 = time.perf_counter()
-
-    staged_path = str(out / "staged")
-    if not (resume and (out / "staged" / "_SUCCESS").exists()):
+    staged_path = f"{out_dir}/staged"
+    if not (resume and fs_exists(spark, f"{staged_path}/_SUCCESS")):
         stage_documents(docs, text=text, id_col=id_col, k=k).write.mode(
             "overwrite"
         ).parquet(staged_path)
@@ -299,16 +296,19 @@ def run_dedup_pipeline(
 
     # exact dedup first: one winner per content hash; near-dup stages
     # then operate on exact-group winners only. Persisted: the aggregate
-    # feeds the dup-group count, the winner count, AND the semi-join —
-    # unpersisted it would run three times (the same
-    # recompute-per-consumer shape the candidate join had)
+    # feeds the counts AND the semi-join. sum(_n) counts the staged
+    # table, never the raw corpus (the staging pass must stay the ONLY
+    # read of the text — bench_dedup_pipeline.py proves it)
     winners = (
         staged.groupBy("content_hash")
         .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("_n"))
         .persist()
     )
-    n_exact_winners = winners.count()
-    n_exact_dups = winners.filter(F.col("_n") > 1).count()
+    exact = winners.agg(
+        F.count(F.lit(1)).alias("winners"),
+        F.count_if(F.col("_n") > 1).alias("dups"),
+        F.sum("_n").alias("staged"),
+    ).collect()[0]
     staged_winners = staged.join(
         winners.select(id_col), on=id_col, how="left_semi"
     )
@@ -323,42 +323,32 @@ def run_dedup_pipeline(
     verified = verify_pairs(
         candidates, staged_winners, id_col=id_col, min_est_jaccard=min_est_jaccard
     )
-    pairs_path = str(out / "pairs")
-    verified.write.mode("overwrite").parquet(pairs_path)
+    n_pairs = write_counted(verified, f"{out_dir}/pairs")
     candidates.unpersist()
-    verified = spark.read.parquet(pairs_path)
-    n_pairs = verified.count()
 
-    components = connected_components(verified)
-    clusters_path = str(out / "clusters")
-    components.write.mode("overwrite").parquet(clusters_path)
-    components = spark.read.parquet(clusters_path)
-    n_clustered = components.count()
+    components = connected_components(spark.read.parquet(f"{out_dir}/pairs"))
+    n_clustered = write_counted(components, f"{out_dir}/clusters")
+    components = spark.read.parquet(f"{out_dir}/clusters")
 
     survivors = _survivors_frame(staged_winners, components, id_col=id_col)
-    survivors_path = str(out / "survivors")
-    survivors.write.mode("overwrite").parquet(survivors_path)
+    n_survivors = write_counted(survivors, f"{out_dir}/survivors")
     # staged_winners (via the winners semi-join) was consumed again by
     # the survivors write — only now is the aggregate free to go
     winners.unpersist()
 
-    # counted on the narrow staged table: counting the raw corpus would
-    # re-touch the text files (the staging pass must stay the ONLY read
-    # of the text — bench_dedup_pipeline.py proves it); one count reused
-    # for both manifest fields
-    n_staged = staged.count()
+    n_staged = exact["staged"] or 0
     manifest = {
         "input_docs": n_staged,
         "staged_docs": n_staged,
-        "exact_dup_groups_gt1": n_exact_dups,
-        "exact_winners": n_exact_winners,
+        "exact_dup_groups_gt1": exact["dups"],
+        "exact_winners": exact["winners"],
         "candidate_pairs": n_candidates,
         "verified_pairs": n_pairs,
         "clustered_docs": n_clustered,
-        "survivors": spark.read.parquet(survivors_path).count(),
+        "survivors": n_survivors,
         "min_est_jaccard": min_est_jaccard,
         "k": k,
         "wall_sec": round(time.perf_counter() - t0, 2),
     }
-    (out / "manifest.json").write_text(json.dumps(manifest, indent=1))
+    fs_write_json(spark, f"{out_dir}/manifest.json", manifest)
     return manifest

@@ -22,20 +22,21 @@ Scale design:
   are skipped. On Iceberg at 10^12 files the staging pass is the
   ``bucket(N, …)`` partition transform at ingest.
 - The per-row invariant ``sha2(content, 256)`` is rolled up per shard
-  commutatively (sum of the first 15 hex digits as bigint) and can be
-  re-validated against the source at any time.
+  commutatively (sum of the first 15 hex digits as ``decimal(38,0)``)
+  and can be re-validated against the source at any time.
+- Counts are observed on the writes (:func:`write_counted`), never read
+  back; manifests go through :mod:`curies_spark.fsio` (any Hadoop URI).
 """
 
 from __future__ import annotations
 
-import json
 import time
-from pathlib import Path
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..core.converter import Converter
+from ..fsio import fs_delete, fs_glob, fs_read_json, fs_write_json
 from ..functions import kernels
 from ..operators.triples import curie_prefix
 
@@ -49,6 +50,7 @@ __all__ = [
     "run_pipeline",
     "sha256_rollup",
     "validate_content_invariant",
+    "write_counted",
 ]
 
 #: URI mentions: scheme up to whitespace/quote/bracket. Kept simple and
@@ -167,8 +169,8 @@ def build_triples(linked: DataFrame, converter) -> DataFrame:
 
 def sha256_rollup(df: DataFrame, *, content: str = "content") -> "Any":
     """Commutative rollup of per-row sha256(content): sum of the first 15
-    hex digits as bigint. Order-independent, overflow-safe at 10^12 rows
-    (sum fits in a Spark decimal aggregate)."""
+    hex digits as ``decimal(38,0)``. Order-independent, overflow-safe at
+    10^12 rows (ANSI mode would fail a bigint sum loudly)."""
     return F.sum(F.conv(F.substring(F.sha2(F.col(content), 256), 1, 15), 16, 10).cast("decimal(38,0)"))
 
 
@@ -180,12 +182,22 @@ def validate_content_invariant(source: DataFrame, manifests: "list[dict]") -> bo
     return int(total) == recorded
 
 
+def write_counted(df: DataFrame, path: str) -> int:
+    """Overwrite ``path`` with ``df`` as parquet; returns the rows
+    written, observed on top of ``df`` — above its last exchange, in
+    result tasks, whose accumulators Spark applies exactly once (a
+    retried or speculated map stage would merge its own again)."""
+    rows = Observation()
+    df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
+    return rows.get["n"]
+
+
 def _shard_col(n_shards: int):
     return F.pmod(F.xxhash64(F.col("repo"), F.col("path"), F.col("commit")), F.lit(n_shards))
 
 
 def _stage_shards(
-    spark: SparkSession, repos: DataFrame, out: Path, n_shards: int, *, resume: bool
+    spark: SparkSession, repos: DataFrame, out: str, n_shards: int, *, resume: bool
 ) -> str:
     """Stage 0: ONE full pass over the source materializes the shard id
     as a *partition* column (``{out}/_staged/_shard=K/``).
@@ -211,31 +223,22 @@ def _stage_shards(
     ``out_dir`` or ``resume=False``; ``validate_content_invariant``
     against the new source detects drift after the fact.
     """
-    staged = out / "_staged"
-    marker = out / "_manifests" / "staged.json"
-    if resume and marker.exists():
-        recorded = json.loads(marker.read_text())
-        if recorded.get("n_shards") == n_shards:
-            return str(staged)
+    staged = f"{out}/_staged"
+    marker = f"{out}/_manifests/staged.json"
+    if resume and (fs_read_json(spark, marker) or {}).get("n_shards") == n_shards:
+        return staged
     (
         repos.withColumn("_shard", _shard_col(n_shards))
         .write.mode("overwrite")
         .partitionBy("_shard")
-        .parquet(str(staged))
+        .parquet(staged)
     )
-    _atomic_write(marker, json.dumps({"n_shards": n_shards}))
-    return str(staged)
-
-
-def _atomic_write(path: Path, text: str) -> None:
-    path.parent.mkdir(parents=True, exist_ok=True)
-    tmp = path.with_suffix(".tmp")
-    tmp.write_text(text)
-    tmp.replace(path)
+    fs_write_json(spark, marker, {"n_shards": n_shards})
+    return staged
 
 
 def _run_shard(
-    spark: SparkSession, staged_path: str, out: Path, bc, shard: int, n_shards: int
+    spark: SparkSession, staged_path: str, out: str, bc, shard: int, n_shards: int
 ) -> dict:
     """One shard's map phase: stats → mentions → linking → file edges +
     entity side-output, finished by an atomic manifest write (the
@@ -261,21 +264,19 @@ def _run_shard(
 
     mentions = extract_mentions(shard_df)
     linked = link_mentions(mentions, bc).cache()
-    n_mentions = linked.count()
-    n_linked = linked.filter(F.col("entity").isNotNull()).count()
+    link_row = linked.agg(
+        F.count(F.lit(1)).alias("mentions"), F.count("entity").alias("linked")
+    ).collect()[0]
 
-    build_file_edges(linked).write.mode("overwrite").parquet(
-        str(out / "triples" / f"shard={shard}")
-    )
+    n_triples = write_counted(build_file_edges(linked), f"{out}/triples/shard={shard}")
     # side output for the merge phase: this shard's (repo, entity) set
     (
         linked.filter(F.col("entity").isNotNull())
         .select("repo", "entity")
         .distinct()
         .write.mode("overwrite")
-        .parquet(str(out / "_entities" / f"shard={shard}"))
+        .parquet(f"{out}/_entities/shard={shard}")
     )
-    n_triples = spark.read.parquet(str(out / "triples" / f"shard={shard}")).count()
     linked.unpersist()
 
     manifest = {
@@ -285,12 +286,12 @@ def _run_shard(
         "n_shards": n_shards,
         "input_rows": stats_row["input_rows"],
         "content_sha_rollup": str(stats_row["content_sha_rollup"] or 0),
-        "mentions": n_mentions,
-        "linked_mentions": n_linked,
+        "mentions": link_row["mentions"],
+        "linked_mentions": link_row["linked"],
         "triples": n_triples,
         "wall_sec": round(time.perf_counter() - t0, 3),
     }
-    _atomic_write(out / "_manifests" / f"shard-{shard}.json", json.dumps(manifest))
+    fs_write_json(spark, f"{out}/_manifests/shard-{shard}.json", manifest)
     return manifest
 
 
@@ -309,7 +310,8 @@ def run_pipeline(
     Writes ``{out_dir}/triples/shard=K/`` parquet and
     ``{out_dir}/_manifests/shard-K.json`` lineage manifests; returns the
     aggregate metrics dict. With ``resume=True``, shards whose manifest
-    already exists are skipped (checkpoint resume after a failure).
+    already exists are skipped (checkpoint resume after a failure);
+    ``resume=False`` discards all derived state and rebuilds it.
 
     ``max_concurrent_shards`` shard jobs are submitted from driver
     threads so the cluster never idles between a shard's stages
@@ -326,100 +328,68 @@ def run_pipeline(
         conv = pipeline_converter()
     bc = spark.sparkContext.broadcast(conv)
 
-    # count-backs over just-written parquet (n_triples, merge totals)
-    # answer from row-group metadata instead of re-scanning data pages —
-    # measured 2x on the end-to-end job (BENCH/round2_pipeline.json).
-    # Scoped: restored on exit so the caller's session is not mutated.
-    _agg_pd_key = "spark.sql.parquet.aggregatePushdown"
-    _agg_pd_prev = spark.conf.get(_agg_pd_key, None)
-    spark.conf.set(_agg_pd_key, "true")
+    manifest_dir = f"{out_dir}/_manifests"
 
-    try:
-        out = Path(out_dir)
-        manifest_dir = out / "_manifests"
-        manifest_dir.mkdir(parents=True, exist_ok=True)
+    # geometry guard: a shard manifest produced under a different
+    # n_shards describes a different hash slice — trusting it would
+    # silently mix slices, and its stale shard=K outputs would still be
+    # read by the directory-level merge phase. A geometry change (or a
+    # run without resume) therefore invalidates ALL derived state
+    # (outputs + manifests), not just the mismatched manifests.
+    names = fs_glob(spark, manifest_dir, "shard-*.json")
+    existing = {n: fs_read_json(spark, f"{manifest_dir}/{n}") for n in names} if resume else {}
+    if names and (not resume or any(m.get("n_shards") != n_shards for m in existing.values())):
+        for stale in ("triples", "_entities"):
+            fs_delete(spark, f"{out_dir}/{stale}")
+        for name in names + ["merge.json"]:
+            fs_delete(spark, f"{manifest_dir}/{name}")
+        existing = {}
 
-        # geometry guard: a shard manifest produced under a different
-        # n_shards describes a different hash slice — trusting it would
-        # silently mix slices, and its stale shard=K outputs would still
-        # be read by the directory-level merge phase. A geometry change
-        # therefore invalidates ALL derived state (outputs + manifests),
-        # not just the mismatched manifests.
-        existing = sorted(manifest_dir.glob("shard-*.json"))
-        if existing and any(
-            json.loads(p.read_text()).get("n_shards") != n_shards for p in existing
-        ):
-            import shutil
+    # past the guard every manifest left is one of this geometry's shards
+    metrics: list[dict] = list(existing.values())
+    resumed = len(metrics)
+    pending = [k for k in range(n_shards) if f"shard-{k}.json" not in existing]
 
-            for stale in ("triples", "_entities"):
-                shutil.rmtree(out / stale, ignore_errors=True)
-            for p in existing:
-                p.unlink()
-            (manifest_dir / "merge.json").unlink(missing_ok=True)
-
-        metrics: list[dict] = []
-        resumed = 0
-        pending: list[int] = []
-        for shard in range(n_shards):
-            manifest_path = manifest_dir / f"shard-{shard}.json"
-            if resume and manifest_path.exists():
-                metrics.append(json.loads(manifest_path.read_text()))
-                resumed += 1
-            else:
-                pending.append(shard)
-
-        if pending:
-            staged_path = _stage_shards(spark, repos, out, n_shards, resume=resume)
-            with ThreadPoolExecutor(max_workers=max(1, max_concurrent_shards)) as pool:
-                futures = {
-                    shard: pool.submit(
-                        _run_shard, spark, staged_path, out, bc, shard, n_shards
-                    )
-                    for shard in pending
-                }
-                # each shard persists its own manifest on success; one
-                # failing shard therefore never discards finished ones
-                for shard, future in futures.items():
-                    metrics.append(future.result())
-        metrics.sort(key=lambda m: m["shard"])
-
-        # merge phase: entity-scoped edges over the union of side outputs.
-        # Recomputed whenever any shard ran this invocation; skipped only on
-        # a fully-resumed run with an existing merge manifest.
-        merge_manifest_path = manifest_dir / "merge.json"
-        if resumed == n_shards and merge_manifest_path.exists():
-            merge_manifest = json.loads(merge_manifest_path.read_text())
-        else:
-            t0 = time.perf_counter()
-            repo_entities = spark.read.parquet(str(out / "_entities")).distinct()
-            entity_edges = build_entity_edges(repo_entities, bc).dropDuplicates(
-                ["subject", "predicate", "object"]
-            )
-            entity_edges.write.mode("overwrite").parquet(str(out / "triples" / "shard=merge"))
-            n_entity_triples = spark.read.parquet(
-                str(out / "triples" / "shard=merge")
-            ).count()
-            merge_manifest = {
-                "shard": "merge",
-                "triples": n_entity_triples,
-                "wall_sec": round(time.perf_counter() - t0, 3),
+    if pending:
+        staged_path = _stage_shards(spark, repos, out_dir, n_shards, resume=resume)
+        with ThreadPoolExecutor(max_workers=max(1, max_concurrent_shards)) as pool:
+            futures = {
+                shard: pool.submit(_run_shard, spark, staged_path, out_dir, bc, shard, n_shards)
+                for shard in pending
             }
-            merge_manifest_path.write_text(json.dumps(merge_manifest))
+            # each shard persists its own manifest on success; one
+            # failing shard therefore never discards finished ones
+            for shard, future in futures.items():
+                metrics.append(future.result())
+    metrics.sort(key=lambda m: m["shard"])
 
-        totals = {
-            "shards": n_shards,
-            "input_rows": sum(m["input_rows"] for m in metrics),
-            "mentions": sum(m["mentions"] for m in metrics),
-            "linked_mentions": sum(m["linked_mentions"] for m in metrics),
-            "triples": sum(m["triples"] for m in metrics) + merge_manifest["triples"],
-            "resumed_shards": resumed,
-            "manifests": metrics,
-            "merge": merge_manifest,
+    # merge phase: entity-scoped edges over the union of side outputs.
+    # Recomputed whenever any shard ran this invocation; skipped only on
+    # a fully-resumed run with an existing merge manifest.
+    merge_manifest_path = f"{manifest_dir}/merge.json"
+    merge_manifest = fs_read_json(spark, merge_manifest_path) if resumed == n_shards else None
+    if merge_manifest is None:
+        t0 = time.perf_counter()
+        repo_entities = spark.read.parquet(f"{out_dir}/_entities").distinct()
+        entity_edges = build_entity_edges(repo_entities, bc).dropDuplicates(
+            ["subject", "predicate", "object"]
+        )
+        merge_manifest = {
+            "shard": "merge",
+            "triples": write_counted(entity_edges, f"{out_dir}/triples/shard=merge"),
+            "wall_sec": round(time.perf_counter() - t0, 3),
         }
-        (out / "_manifests" / "_totals.json").write_text(json.dumps(totals))
-        return totals
-    finally:
-        if _agg_pd_prev is None:
-            spark.conf.unset(_agg_pd_key)
-        else:
-            spark.conf.set(_agg_pd_key, _agg_pd_prev)
+        fs_write_json(spark, merge_manifest_path, merge_manifest)
+
+    totals = {
+        "shards": n_shards,
+        "input_rows": sum(m["input_rows"] for m in metrics),
+        "mentions": sum(m["mentions"] for m in metrics),
+        "linked_mentions": sum(m["linked_mentions"] for m in metrics),
+        "triples": sum(m["triples"] for m in metrics) + merge_manifest["triples"],
+        "resumed_shards": resumed,
+        "manifests": metrics,
+        "merge": merge_manifest,
+    }
+    fs_write_json(spark, f"{manifest_dir}/_totals.json", totals)
+    return totals

@@ -110,7 +110,7 @@ def start_ann_index_stream(
     batch-built one. The layout rides in ``_params`` and is verified on
     every (re)start alongside the hyperplanes — resuming with the wrong
     layout would leave rows invisible to the other layout's probes."""
-    from .fsio import fs_exists
+    from ..fsio import fs_exists
 
     params = {
         "dim": dim,

@@ -48,7 +48,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..plans.dedup_pipeline import band_keys, estimated_jaccard_col
 from ..plans.dedup_pipeline import stage_documents as _stage
-from .fsio import fs_delete, fs_exists, fs_read_text, fs_write_text, partition_ids
+from ..fsio import fs_delete, fs_exists, fs_read_json, fs_write_json, partition_ids
 
 __all__ = [
     "DOC_SCHEMA",
@@ -104,18 +104,17 @@ def _check_signature_format(spark: SparkSession, out_dir: str, *, k: int) -> Non
 
     marker = f"{out_dir}/_signature.json"
     fmt = _signature_format(k)
-    existing = fs_read_text(spark, marker)
-    if existing is not None:
-        recorded = json.loads(existing)
-        if recorded != fmt:
-            raise RuntimeError(
-                "streaming dedup store at "
-                f"{out_dir!r} was written with signature format {recorded}, "
-                f"but this engine computes {fmt}; resuming would silently "
-                "miss near-duplicates across the format boundary. Rebuild "
-                "the store (or run with a fresh out_dir)."
-            )
+    recorded = fs_read_json(spark, marker)
+    if recorded == fmt:
         return
+    if recorded is not None:
+        raise RuntimeError(
+            "streaming dedup store at "
+            f"{out_dir!r} was written with signature format {recorded}, "
+            f"but this engine computes {fmt}; resuming would silently "
+            "miss near-duplicates across the format boundary. Rebuild "
+            "the store (or run with a fresh out_dir)."
+        )
     if fs_exists(spark, f"{out_dir}/store"):
         raise RuntimeError(
             f"streaming dedup store at {out_dir!r} predates signature-format "
@@ -124,7 +123,7 @@ def _check_signature_format(spark: SparkSession, out_dir: str, *, k: int) -> Non
             f"it manually with _signature.json = {json.dumps(fmt, sort_keys=True)} "
             "after verifying it was written by this engine version)."
         )
-    fs_write_text(spark, marker, json.dumps(fmt, sort_keys=True))
+    fs_write_json(spark, marker, fmt)
 
 
 def read_document_stream(
@@ -163,8 +162,9 @@ def _store_parts(
     Shared by the signature store AND the pairs table (both are
     batch-partitioned append-only fact sets with the identical
     superseded-dir-ignoring read rule). Listing goes through the Hadoop
-    FileSystem API (:mod:`.fsio`), so the state can live wherever the
-    corpus lives — local path, ``file://``, ``hdfs://``, ``s3a://``."""
+    FileSystem API (:mod:`curies_spark.fsio`), so the state can live
+    wherever the corpus lives — local path, ``file://``, ``hdfs://``,
+    ``s3a://``."""
     compacts = [
         n
         for n in partition_ids(spark, root, "compact")

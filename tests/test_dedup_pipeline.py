@@ -220,3 +220,49 @@ def test_family_collapse_preserves_components(spark):
             )
         }
         assert components(got) == components(legacy)
+
+
+def test_file_uri_resume_skips_staging(spark, corpus, tmp_path, monkeypatch):
+    """The staging check of a ``file://`` out_dir looks where Spark
+    wrote ``staged/``, so a resume skips the text pass."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    out = f"file://{tmp_path}/resume"
+    P.run_dedup_pipeline(spark, corpus, out)
+
+    def boom(*a, **k):
+        raise AssertionError("staging must not recompute on resume")
+
+    monkeypatch.setattr(P, "stage_documents", boom)
+    manifest = P.run_dedup_pipeline(spark, corpus, out, resume=True)
+    assert manifest["staged_docs"] == 9
+    assert (tmp_path / "resume" / "manifest.json").exists()
+    assert list(cwd.iterdir()) == []
+
+
+def test_manifest_counts_match_readback(spark, corpus, tmp_path):
+    """Counts observed on the writes (and folded into the winners
+    aggregate) equal a read-back of every output."""
+    out = str(tmp_path / "counts")
+    manifest = P.run_dedup_pipeline(spark, corpus, out, min_est_jaccard=0.4)
+    staged = spark.read.parquet(f"{out}/staged")
+    groups = staged.groupBy("content_hash").count()
+    winners = staged.join(
+        staged.groupBy("content_hash").agg(F.min("doc_id").alias("doc_id")).select("doc_id"),
+        on="doc_id",
+        how="left_semi",
+    )
+    readback = {
+        "input_docs": corpus.count(),
+        "staged_docs": staged.count(),
+        "exact_dup_groups_gt1": groups.filter(F.col("count") > 1).count(),
+        "exact_winners": groups.count(),
+        "candidate_pairs": P.band_pairs(winners).count(),
+        "verified_pairs": spark.read.parquet(f"{out}/pairs").count(),
+        "clustered_docs": spark.read.parquet(f"{out}/clusters").count(),
+        "survivors": spark.read.parquet(f"{out}/survivors").count(),
+    }
+    assert {k: manifest[k] for k in readback} == readback
+    with open(f"{out}/manifest.json") as fh:
+        assert json.load(fh) == manifest

@@ -184,3 +184,119 @@ def test_resume_rejects_changed_shard_geometry(spark, repos, tmp_path):
     # and the new-geometry manifests resume cleanly
     totals_again = run_pipeline(spark, repos, out, n_shards=4)
     assert totals_again["resumed_shards"] == 4
+
+
+def test_file_uri_out_dir_resumes(spark, repos, tmp_path, monkeypatch):
+    """A ``file://`` out_dir keeps markers and manifests beside the data
+    Spark writes (not in a ``file:`` directory under the working
+    directory), so a rerun finds them and resumes every shard."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    out = f"file://{tmp_path}/kg"
+    totals = run_pipeline(spark, repos, out, n_shards=2)
+    assert len(list((tmp_path / "kg" / "_manifests").glob("shard-*.json"))) == 2
+    assert list(cwd.iterdir()) == []
+    totals2 = run_pipeline(spark, repos, out, n_shards=2)
+    assert totals2["resumed_shards"] == totals2["shards"] == 2
+    assert totals2["triples"] == totals["triples"]
+
+
+def test_counts_match_readback(spark, repos, tmp_path):
+    """Counts observed on the writes equal what a read-back of the
+    written data (and a recount of the staged input) gives."""
+    from curies_spark.plans.pipeline import sha256_rollup
+
+    out = str(tmp_path / "kg_counts")
+    totals = run_pipeline(spark, repos, out, n_shards=2)
+    conv = pipeline_converter()
+    staged = spark.read.parquet(f"{out}/_staged")
+    for m in totals["manifests"]:
+        shard_df = staged.filter(F.col("_shard") == m["shard"]).drop("_shard")
+        stats = shard_df.select(F.count(F.lit(1)).alias("n"), sha256_rollup(shard_df).alias("s"))
+        n_rows, rollup = stats.collect()[0]
+        linked = link_mentions(extract_mentions(shard_df), conv)
+        assert m["input_rows"] == n_rows
+        assert m["content_sha_rollup"] == str(rollup)
+        assert m["mentions"] == linked.count()
+        assert m["linked_mentions"] == linked.filter(F.col("entity").isNotNull()).count()
+        assert m["triples"] == spark.read.parquet(f"{out}/triples/shard={m['shard']}").count()
+        on_disk = json.loads((Path(out) / "_manifests" / f"shard-{m['shard']}.json").read_text())
+        assert on_disk == m
+    merge = spark.read.parquet(f"{out}/triples/shard=merge").count()
+    assert totals["merge"]["triples"] == merge
+    assert totals["input_rows"] == repos.count()
+    assert totals["triples"] == spark.read.parquet(f"{out}/triples").count()
+    assert validate_content_invariant(repos, totals["manifests"])
+
+
+def test_truncated_artifact_raises_guided_error(spark, repos, tmp_path):
+    """A torn staged.json, shard-K.json or merge.json fails the next run
+    with an error naming the file and the way out — never a raw
+    JSONDecodeError."""
+    out = str(tmp_path / "kg_torn")
+    run_pipeline(spark, repos, out, n_shards=2)
+    manifests = Path(out) / "_manifests"
+
+    def truncate(name):
+        path = manifests / name
+        good = path.read_text()
+        path.write_text(good[: len(good) // 2])
+        return good
+
+    # merge.json is read on a fully resumed run, shard-K.json on every
+    # resumed run, staged.json when some shard must be recomputed
+    for name in ("merge.json", "shard-0.json"):
+        good = truncate(name)
+        with pytest.raises(RuntimeError, match="fresh out_dir") as err:
+            run_pipeline(spark, repos, out, n_shards=2)
+        assert name in str(err.value)
+        (manifests / name).write_text(good)
+    (manifests / "shard-1.json").unlink()
+    truncate("staged.json")
+    with pytest.raises(RuntimeError, match="staged.json"):
+        run_pipeline(spark, repos, out, n_shards=2)
+    # the guided way out works
+    assert run_pipeline(spark, repos, out, n_shards=2, resume=False)["resumed_shards"] == 0
+
+
+def test_failed_rename_keeps_artifacts(spark, repos, tmp_path, monkeypatch):
+    """A crash between writing an artifact's temp file and renaming it
+    over the target leaves the target absent (shard-1.json) or with its
+    old content (merge.json); the rerun gives identical totals."""
+    from curies_spark import fsio
+
+    out = str(tmp_path / "kg_crash")
+    manifests = Path(out) / "_manifests"
+    real_rename = fsio._rename
+
+    def fail_on(name):
+        def rename(spark, src, dst):
+            if dst.endswith(f"/{name}"):
+                raise OSError(f"injected crash before replacing {name}")
+            real_rename(spark, src, dst)
+
+        monkeypatch.setattr(fsio, "_rename", rename)
+
+    fail_on("shard-1.json")
+    with pytest.raises(OSError, match="injected"):
+        run_pipeline(spark, repos, out, n_shards=2, max_concurrent_shards=1)
+    assert not (manifests / "shard-1.json").exists()
+    assert (manifests / "shard-0.json").exists()
+    monkeypatch.setattr(fsio, "_rename", real_rename)
+    clean = run_pipeline(spark, repos, out, n_shards=2)
+    assert clean["resumed_shards"] == 1
+    assert clean["input_rows"] == 2000
+    assert clean["triples"] == spark.read.parquet(f"{out}/triples").count()
+
+    old_merge = (manifests / "merge.json").read_text()
+    (manifests / "shard-1.json").unlink()
+    fail_on("merge.json")
+    with pytest.raises(OSError, match="injected"):
+        run_pipeline(spark, repos, out, n_shards=2)
+    assert (manifests / "merge.json").read_text() == old_merge
+    monkeypatch.setattr(fsio, "_rename", real_rename)
+    again = run_pipeline(spark, repos, out, n_shards=2)
+    assert again["resumed_shards"] == 2
+    for key in ("input_rows", "mentions", "linked_mentions", "triples", "merge"):
+        assert again[key] == clean[key]

@@ -915,11 +915,11 @@ def test_signature_format_guard(spark, tmp_path):
     import pytest
 
     from curies_spark.streaming import dedup as SD
-    from curies_spark.streaming.fsio import fs_delete, fs_read_text
+    from curies_spark.fsio import fs_delete, fs_read_json
 
     out = str(tmp_path / "out")
     SD._check_signature_format(spark, out, k=3)  # fresh dir: stamps
-    assert fs_read_text(spark, f"{out}/_signature.json") is not None
+    assert fs_read_json(spark, f"{out}/_signature.json") is not None
     SD._check_signature_format(spark, out, k=3)  # same recipe: fine
     with pytest.raises(RuntimeError, match="signature format"):
         SD._check_signature_format(spark, out, k=4)  # different shingle k

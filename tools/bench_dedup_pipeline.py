@@ -37,7 +37,6 @@ def main() -> None:
         .appName("bench-dedup-pipeline")
         .config("spark.sql.shuffle.partitions", str(int(cpus) * 2))
         .config("spark.driver.memory", "8g")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # UI on: the status REST API is the scan-byte ground truth
         .config("spark.ui.enabled", "true")

@@ -35,9 +35,6 @@ def main() -> None:
         .config("spark.executor.memory", "2g")
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.sql.adaptive.enabled", "true")
-        # count-backs over written parquet (n_triples, manifests) answer
-        # from row-group metadata instead of scanning data pages
-        .config("spark.sql.parquet.aggregatePushdown", "true")
         # UI stays on: the status REST API is how we account actual
         # bytes scanned (proof the staging pass reads the source ONCE)
         .config("spark.ui.enabled", "true")
