@@ -4,11 +4,11 @@ Scale design per operator:
 
 - **Exact**: hash-groupBy on the content digest — uniform partitioning,
   partial+final aggregation, no skew risk.
-- **MinHash+LSH**: shingle → 64-bit hash → per-permutation min
-  aggregates (one shuffle keyed by doc) → band keys → candidate pairs
-  via a self-equi-join on (band, key). The join key space is the band
-  hash, which is uniform; at 10^12 docs the band join is the only wide
-  operation and AQE handles residual bucket skew.
+- **MinHash+LSH**: shingle → 48-bit hash → per-permutation minima in
+  a map-only Arrow kernel → signature-family collapse → band keys →
+  candidate pairs via a self-equi-join on (band, key) — the one LSH
+  blocking layer, shared by the batch pipeline and the streaming store.
+  The band join is the only wide operation; AQE handles bucket skew.
 - **n-gram Jaccard**: distinct (doc, shingle) → self-join on shingle
   with a document-frequency cap (hot shingles are pruned — otherwise a
   stopword shingle creates a quadratic join blow-up) → pair intersection
@@ -29,20 +29,24 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 __all__ = [
+    "band_keys",
+    "band_pairs",
+    "band_self_pairs",
+    "collapse_signature_families",
     "connected_components",
     "dedup_by_pairs",
+    "estimated_jaccard_col",
     "exact_dedup",
     "exact_dup_groups",
     "minhash_candidate_pairs",
     "minhash_signature",
     "minhash_signature_col",
-    "minhash_signature_exploded",
     "ngram_jaccard_pairs",
-    "shingle_hash_col",
     "shingles_arrow_col",
-    "shingles_col",
+    "signature_format",
     "simhash_col",
     "simhash_candidate_pairs",
+    "verify_pairs",
 ]
 
 #: MinHash permutations: ``h_i = h XOR _R[i]`` over the 48-bit
@@ -77,28 +81,11 @@ N_PERM = 16
 BAND_SIZE = 4  # 4 bands × 4 rows
 
 
-def shingles_col(text: "Column | str", *, k: int = 3) -> Column:
-    """k-token shingles of the lowercased whitespace tokenization.
-
-    Documents shorter than k tokens produce their full token join as a
-    single shingle (so short docs still dedup exactly)."""
-    from .text import tokens_col
-
-    toks = tokens_col(text)
-    n = F.size(toks)
-    full = F.array(F.concat_ws(" ", toks))
-    windows = F.transform(
-        F.sequence(F.lit(0), n - F.lit(k)),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-    )
-    return F.when(n >= k, windows).otherwise(full)
-
-
 def _batch_shingles(series, k: int):
     """Vectorized k-token shingle windows for a pandas Series of texts —
-    the batch twin of :func:`shingles_col` (same lowercasing, same
-    whitespace set: pandas ``.str.split()`` splits on exactly the
-    engine's :data:`~curies_spark.operators.text.WS_CHARS` class,
+    the batch twin of the JVM ``shingles_col`` in tests/twins.py (same
+    lowercasing, same whitespace set: pandas ``.str.split()`` splits on
+    exactly the engine's :data:`~curies_spark.operators.text.WS_CHARS` class,
     asserted in tests; same short-document rule: < k tokens → one
     shingle joining all tokens, NULL/empty → the ``""`` shingle).
 
@@ -144,13 +131,14 @@ def _batch_shingles(series, k: int):
 
 
 def shingles_arrow_col(text: "Column | str", *, k: int = 3) -> Column:
-    """:func:`shingles_col` as an Arrow-batched kernel — identical
+    """k-token shingles as an Arrow-batched kernel — identical
     values (verified row-for-row in tests), ~7× faster than the
     higher-order-function form, whose ``transform``+``slice`` lambdas
     are interpreted per element (the measured cost of generating 264k
     shingles dropped from 4.0s to 0.6s on this host). Use this form in
     hot paths that explode the shingle stream (n-gram Jaccard); the
-    native column stays as the oracle-shaped differential twin."""
+    native column ``shingles_col`` in tests/twins.py stays as the
+    oracle-shaped differential twin."""
     from pyspark.sql.types import StringType
 
     c = F.col(text) if isinstance(text, str) else text
@@ -171,14 +159,6 @@ def shingles_arrow_col(text: "Column | str", *, k: int = 3) -> Column:
         )
 
     return _shingles(c)
-
-
-def shingle_hash_col(shingle: Column) -> Column:
-    """Deterministic 48-bit integer hash of a shingle via sha256 — stable
-    across engines (unlike xxhash64, DuckDB can reproduce it), and small
-    enough that ``a * h + b`` stays inside a signed 64-bit long under
-    ANSI arithmetic (max a=59 → 59·2^48 < 2^63)."""
-    return F.conv(F.substring(F.sha2(shingle, 256), 1, 12), 16, 10).cast(LongType())
 
 
 def exact_dedup(df: DataFrame, *, text: str = "text", keep: str = "min", id_col: str = "doc_id") -> DataFrame:
@@ -237,7 +217,8 @@ def minhash_signature(
 ) -> DataFrame:
     """Per-document MinHash signature via the shuffle-free batch kernel
     (:func:`minhash_signature_col`). Output schema AND values match
-    :func:`minhash_signature_exploded` (the differential twin) on any
+    ``minhash_signature_exploded`` (the differential twin in
+    tests/twins.py) on any
     input — both tokenize on the engine's ONE explicit whitespace class
     (:data:`~curies_spark.operators.text.WS_CHARS`), including
     NBSP/U+2028-style separators real corpora contain. As a map-only
@@ -250,23 +231,6 @@ def minhash_signature(
     )
 
 
-def minhash_signature_exploded(
-    df: DataFrame, *, text: str = "text", id_col: str = "doc_id", k: int = 3
-) -> DataFrame:
-    """Per-document MinHash signature as N_PERM min-aggregates over the
-    exploded shingle hashes — one shuffle keyed by document id. The
-    set-based twin of :func:`minhash_signature` (same values; kept for
-    differential testing and as the oracle-shaped form)."""
-    exploded = df.select(
-        F.col(id_col), F.explode(shingles_col(text, k=k)).alias("_sh")
-    ).select(F.col(id_col), shingle_hash_col(F.col("_sh")).alias("_h"))
-    aggs = [
-        F.min(F.col("_h").bitwiseXOR(F.lit(_R[i]))).alias(f"mh{i}")
-        for i in range(N_PERM)
-    ]
-    return exploded.groupBy(id_col).agg(*aggs)
-
-
 def minhash_signature_col(text: "Column | str", *, k: int = 3) -> Column:
     """Array of the N_PERM MinHash values per document — an Arrow-batched
     kernel with no per-row Python: the batch is tokenized with pandas'
@@ -275,9 +239,9 @@ def minhash_signature_col(text: "Column | str", *, k: int = 3) -> Column:
     once per DISTINCT shingle (``pd.factorize``), and the per-document
     minima are ``np.minimum.reduceat`` segment reductions.
 
-    Matches :func:`shingle_hash_col` exactly (first 6 sha256 bytes,
-    big-endian = the first 12 hex chars as a base-16 number) and
-    :func:`shingles_col`'s short-document rule (fewer than ``k`` tokens
+    Matches the twins' ``shingle_hash_col`` exactly (first 6 sha256
+    bytes, big-endian = the first 12 hex chars as a base-16 number) and
+    ``shingles_col``'s short-document rule (fewer than ``k`` tokens
     → one shingle joining all tokens; NULL/empty text → the ``""``
     shingle). Tokenization lowercases and splits on Python's whitespace
     set — which is exactly the engine's explicit
@@ -332,57 +296,77 @@ def minhash_signature_col(text: "Column | str", *, k: int = 3) -> Column:
     return _minhash(c)
 
 
-def minhash_candidate_pairs(
-    df: DataFrame, *, text: str = "text", id_col: str = "doc_id", k: int = 3
-) -> DataFrame:
-    """LSH candidate pairs: documents agreeing on any band of the
-    signature. Returns (id_a, id_b) with id_a < id_b, distinct.
+def signature_format(k: int) -> dict:
+    """The exact signature recipe this engine version computes, as a
+    comparable dict: tokenizer whitespace set, shingle k, permutation
+    constants, band geometry. Any change to any of these silently
+    changes MinHash signatures — a resumed job would then band or pair
+    against signatures staged under a different recipe."""
+    import hashlib
 
-    Documents with IDENTICAL full signatures — every exact-duplicate
-    family, plus near-identical contents whose 16 minima happen to
-    coincide — collapse to their min-id canon BEFORE banding: an
-    n-member signature family meets itself in every band and would
-    emit O(n²) pairs (a document repeated 10^6 times → ~10^12 pairs).
-    Each member instead emits one star pair to its canon and only
-    canons enter the band join — linear in family size, and
-    candidate-set-equivalent up to connected components (identical
-    signatures ⇒ identical band keys, so every cross pair a member
-    would find, its canon finds). Mirrored literally in the DuckDB
-    oracle (plans/demo_training.oracle_minhash_pairs_sql)."""
-    sig = minhash_signature(df, text=text, id_col=id_col, k=k)
-    sig_cols = [f"mh{i}" for i in range(N_PERM)]
+    from .text import WS_CHARS
 
-    # signature-family collapse: min id per full 16-value signature;
-    # materialized once (lazily) — the star branch and both band-join
-    # sides would otherwise each recompute the canon aggregate+join
-    canon = sig.groupBy(*sig_cols).agg(F.min(id_col).alias("_canon"))
-    with_canon = sig.join(canon, on=sig_cols).localCheckpoint(eager=False)
+    return {
+        "ws_sha": hashlib.sha256(WS_CHARS.encode("utf-8")).hexdigest()[:16],
+        "k": k,
+        "n_perm": N_PERM,
+        "band_size": BAND_SIZE,
+        "perm_sha": hashlib.sha256(
+            ",".join(map(str, _R)).encode("utf-8")
+        ).hexdigest()[:16],
+    }
+
+
+def collapse_signature_families(
+    sigs: DataFrame, *, id_col: str, sig: str
+) -> "tuple[DataFrame, DataFrame]":
+    """Min-id canon per full signature, the skew guard every band join
+    runs behind. Returns ``(star, reps)``: one ``(id_a=canon,
+    id_b=member)`` pair per non-canon member, and the canon rows.
+
+    An n-member signature family (every exact-duplicate family, plus
+    near-identical contents whose signatures coincide) is one hot key
+    in every band and would band-join itself into O(n²) pairs. Only
+    canons may band-join; identical signature ⇒ identical band keys, so
+    connected components are unchanged. The DuckDB oracles
+    (plans/demo_training.py) mirror this collapse."""
+    canon = sigs.groupBy(sig).agg(F.min(id_col).alias("_canon"))
+    # lazily materialized once: the star branch and every band-join side
+    # consume it, and would otherwise each recompute the canon join
+    with_canon = sigs.join(canon, on=sig).localCheckpoint(eager=False)
     star = with_canon.filter(F.col(id_col) != F.col("_canon")).select(
         F.col("_canon").alias("id_a"), F.col(id_col).alias("id_b")
     )
     reps = with_canon.filter(F.col(id_col) == F.col("_canon")).drop("_canon")
+    return star, reps
 
+
+def band_keys(
+    df: DataFrame, *, id_col: str = "doc_id", sig: str = "mh"
+) -> DataFrame:
+    """Explode signatures into their LSH band keys: ``(id_col, band,
+    key)`` with one row per (document, band). The one banding layout
+    for every band join, so no two callers can disagree on which
+    documents collide."""
     n_bands = N_PERM // BAND_SIZE
     bands = [
         F.struct(
             F.lit(b).alias("band"),
-            F.struct(
-                *[
-                    F.col(f"mh{b * BAND_SIZE + r}").alias(f"v{r}")
-                    for r in range(BAND_SIZE)
-                ]
-            ).alias("key"),
+            F.slice(F.col(sig), b * BAND_SIZE + 1, BAND_SIZE).alias("key"),
         )
         for b in range(n_bands)
     ]
-    # the join key is the raw band tuple (band index + BAND_SIZE minhash
-    # values) — engine-independent and exactly as selective as hashing it
-    banded = reps.select(
+    return df.select(
         F.col(id_col), F.explode(F.array(*bands)).alias("bk")
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cross = (
+    ).select(id_col, "bk.band", "bk.key")
+
+
+def band_self_pairs(banded: DataFrame, *, id_col: str) -> DataFrame:
+    """Distinct ``(id_a, id_b)``, ``id_a < id_b``, of the documents in
+    ``banded`` (:func:`band_keys` rows) sharing any ``(band, key)`` — a
+    bucketed equi-join, never all-pairs."""
+    left, right = banded.alias("l"), banded.alias("r")
+    return (
         left.join(
             right,
             on=[
@@ -391,14 +375,77 @@ def minhash_candidate_pairs(
                 F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
             ],
         )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-        )
+        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
         .distinct()
     )
-    # star pairs are distinct by construction and disjoint from cross
-    # pairs (non-canon ids never enter the band join)
+
+
+def band_pairs(
+    staged: DataFrame, *, id_col: str = "doc_id", sig: str = "mh"
+) -> DataFrame:
+    """LSH candidate pairs from signatures: documents agreeing on any
+    (band, band-values) key, after :func:`collapse_signature_families`;
+    returns distinct (id_a, id_b), id_a < id_b."""
+    star, reps = collapse_signature_families(
+        staged.select(F.col(id_col), F.col(sig)), id_col=id_col, sig=sig
+    )
+    cross = band_self_pairs(band_keys(reps, id_col=id_col, sig=sig), id_col=id_col)
     return cross.unionByName(star)
+
+
+def estimated_jaccard_col(sig_a, sig_b) -> Column:
+    """Unbiased LSH Jaccard estimate: the fraction of the N_PERM
+    minhash values on which the two signatures agree.
+
+    Unrolled to N_PERM static element comparisons — fully
+    whole-stage-codegen'd JVM arithmetic. The ``zip_with``/``aggregate``
+    form interprets its lambda per element (16 interpreted calls per
+    candidate pair — the verify stage runs over every pair the band
+    join emits, so at corpus scale this is a hot path)."""
+    total = None
+    for i in range(N_PERM):
+        term = (sig_a[i] == sig_b[i]).cast("int")
+        total = term if total is None else total + term
+    return total / F.lit(N_PERM)
+
+
+def verify_pairs(
+    candidates: DataFrame,
+    staged: DataFrame,
+    *,
+    id_col: str = "doc_id",
+    min_est_jaccard: float = 0.5,
+) -> DataFrame:
+    """Signature-estimate verification of candidate pairs: pure column
+    arithmetic over the ``mh`` signatures — the text column is never
+    touched. Pairs below ``min_est_jaccard`` are dropped."""
+    sig = staged.select(F.col(id_col), F.col("mh"))
+    return (
+        candidates.join(
+            sig.select(F.col(id_col).alias("id_a"), F.col("mh").alias("_ma")),
+            on="id_a",
+        )
+        .join(
+            sig.select(F.col(id_col).alias("id_b"), F.col("mh").alias("_mb")),
+            on="id_b",
+        )
+        .withColumn("est_jaccard", estimated_jaccard_col(F.col("_ma"), F.col("_mb")))
+        .filter(F.col("est_jaccard") >= min_est_jaccard)
+        .select("id_a", "id_b", "est_jaccard")
+    )
+
+
+def minhash_candidate_pairs(
+    df: DataFrame, *, text: str = "text", id_col: str = "doc_id", k: int = 3
+) -> DataFrame:
+    """LSH candidate pairs of a documents table: :func:`band_pairs`
+    over the MinHash signatures. Returns (id_a, id_b) with id_a < id_b,
+    distinct. Mirrored in the DuckDB oracle
+    (plans/demo_training.oracle_minhash_pairs_sql)."""
+    return band_pairs(
+        df.select(F.col(id_col), minhash_signature_col(F.col(text), k=k).alias("mh")),
+        id_col=id_col,
+    )
 
 
 def ngram_jaccard_pairs(
@@ -416,7 +463,7 @@ def ngram_jaccard_pairs(
     documents before the self-join — the standard guard against the
     quadratic blow-up a corpus-wide hot shingle would cause.
     """
-    # Arrow shingle kernel: values identical to shingles_col, ~7× less
+    # Arrow shingle kernel: values identical to the JVM twin, ~7× less
     # map time per text pass (the HOF transform+slice windows are
     # interpreted per element)
     doc_shingles = (
@@ -465,27 +512,6 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-
-
-def _simhash_reference_one(s: "str | None", n_bits: int = 64) -> "int | None":
-    """Straightforward per-row SimHash — the differential twin for
-    :func:`simhash_col` tests (never used in a Spark plan)."""
-    import hashlib
-
-    if s is None:
-        return None
-    tokens = s.lower().split()
-    if not tokens:
-        return 0
-    word = 0
-    for b in range(n_bits):
-        votes = 0
-        for t in tokens:
-            h = int.from_bytes(hashlib.sha256(t.encode("utf-8")).digest()[:8], "big")
-            votes += 1 if (h >> b) & 1 else -1
-        if votes > 0:
-            word |= 1 << b
-    return word - (1 << 64) if word >= (1 << 63) else word
 
 
 def simhash_col(text: "Column | str", *, n_bits: int = 64) -> Column:
@@ -580,25 +606,15 @@ def simhash_candidate_pairs(
     one of 4 disjoint 16-bit bands, by pigeonhole), then verify the
     exact hamming distance natively with bit_count(xor).
 
-    As in :func:`minhash_candidate_pairs`, documents with IDENTICAL
-    signatures (every exact-duplicate family) collapse to their min-id
-    canon before banding — each member emits one star pair (hamming 0)
-    and only canons band-join, turning the O(family²) blow-up into
-    O(family) with the component partition unchanged (identical
-    signature ⇒ identical bands and identical hamming to any third
-    document). Mirrored in the DuckDB oracle
-    (plans/demo_training.oracle_simhash_pairs_sql)."""
-    h = F.col(simhash)
-    sigs = df.select(F.col(id_col), h.alias("_sh"))
-    canon = sigs.groupBy("_sh").agg(F.min(id_col).alias("_canon"))
-    # one lazy materialization shared by the star + band branches
-    with_canon = sigs.join(canon, on="_sh").localCheckpoint(eager=False)
-    star = with_canon.filter(F.col(id_col) != F.col("_canon")).select(
-        F.col("_canon").alias("id_a"),
-        F.col(id_col).alias("id_b"),
-        F.lit(0).cast("int").alias("hamming"),
+    Signature families collapse first
+    (:func:`collapse_signature_families`; star pairs have hamming 0).
+    The band join is not :func:`band_self_pairs` because it computes
+    the hamming distance on the carried signature. Mirrored in the
+    DuckDB oracle (plans/demo_training.oracle_simhash_pairs_sql)."""
+    star, reps = collapse_signature_families(
+        df.select(F.col(id_col), F.col(simhash).alias("_sh")), id_col=id_col, sig="_sh"
     )
-    reps = with_canon.filter(F.col(id_col) == F.col("_canon")).drop("_canon")
+    star = star.withColumn("hamming", F.lit(0).cast("int"))
 
     bands = F.array(
         *[

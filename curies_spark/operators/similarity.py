@@ -65,15 +65,6 @@ def hyperplanes(dim: int, n_planes: int, *, seed: int = 7) -> "list[list[float]]
     return planes
 
 
-def _dot_lit(vec: Column, plane: "list[float]") -> Column:
-    lit = F.array(*[F.lit(float(x)) for x in plane])
-    return F.aggregate(
-        F.zip_with(vec, lit, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _flat_valid(a, b=None):
     """Shared Arrow-batch prep for the cosine kernels: combine chunks,
     intersect validity, and return (valid_mask_or_None, dense matrices).
@@ -135,7 +126,7 @@ def cosine_vs_query_col(vec: Column, query: "list[float]") -> Column:
     (batch × dim) @ dim BLAS product per Arrow batch plus a vectorized
     row-norm, the ``_ivf_assign`` kernel shape. Replaces the
     ``zip_with``/``aggregate`` form (kept as
-    :func:`_cosine_similarity_col_hof` for differential tests): Spark's
+    ``_cosine_similarity_col_hof`` in tests/twins.py): Spark's
     higher-order functions interpret their lambdas per element, paying
     ~dim interpreted calls per ROW on a full-corpus scan — the same
     shape BASELINE.md measured 22× slower on the LSH signing path.
@@ -326,22 +317,6 @@ def cosine_codes_vs_query_col(code: Column, query: "list[float]") -> Column:
     return _cos(code)
 
 
-def _cosine_similarity_col_hof(vec: Column, query: "list[float]") -> Column:
-    """The interpreted higher-order-function form — kept ONLY as the
-    differential twin for :func:`cosine_vs_query_col` tests; never use
-    it on a corpus-scale pass (dim interpreted calls per row)."""
-    q = _unit([float(x) for x in query])
-    dot = _dot_lit(vec, q)
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(vec, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    return dot / F.when(norm > 0, norm).otherwise(F.lit(1.0))
-
-
 #: public name used across the module — the BLAS kernel
 cosine_similarity_col = cosine_vs_query_col
 
@@ -363,21 +338,6 @@ def cosine_topk(
         .orderBy(F.desc("cosine"), F.col(id_col))
         .limit(k)
     )
-
-
-def _lsh_signature_col_hof(vec: Column, planes: "list[list[float]]") -> Column:
-    """Signature via per-plane ``zip_with``/``aggregate`` — kept ONLY as
-    the differential twin for :func:`lsh_signature_col` tests. Spark's
-    higher-order functions interpret their lambdas per element, so this
-    form pays n_planes × dim interpreted calls per row; never use it on
-    a corpus-scale pass."""
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        bit = F.when(_dot_lit(vec, plane) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig = sig + F.shiftleft(bit, i)
-    return sig
 
 
 def lsh_signature_col(vec: Column, planes: "list[list[float]]") -> Column:

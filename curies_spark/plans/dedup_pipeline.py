@@ -15,9 +15,8 @@ table (``doc_id, text, …``):
 2. **Exact groups** — hash groupBy on the 256-bit content hash
    (uniform keys, no skew), min-id winner per group.
 3. **LSH candidates** — band-key equi-join on the staged signatures
-   (operators/dedup.py ``minhash_candidate_pairs``'s banding, applied
-   to the staged table so signatures are not recomputed). Never
-   all-pairs.
+   (operators/dedup.py ``band_pairs``, applied to the staged table so
+   signatures are not recomputed). Never all-pairs.
 4. **Verify** — estimated Jaccard from signature agreement (the
    fraction of the N_PERM minhash values two documents share — the
    standard unbiased LSH estimator). Pure column arithmetic over the
@@ -35,8 +34,9 @@ Outputs under ``out_dir``: ``staged/`` (hash+signature+quality),
 ``clusters/`` (doc_id → component), ``survivors/`` (the deduped
 doc_id set), and ``manifest.json`` with per-stage counts. The staged
 write is the only pass over the text; re-running with the same
-``out_dir`` resumes after staging (manifest-gated, like the KG
-pipeline's shard resume).
+``out_dir`` resumes after staging when ``staged.json`` records the
+same signature recipe (operators/dedup.py ``signature_format``), and
+restages otherwise.
 """
 
 from __future__ import annotations
@@ -45,25 +45,22 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..fsio import fs_exists, fs_write_json
+from ..fsio import fs_delete, fs_read_json, fs_write_json
 from ..operators.dedup import (
-    BAND_SIZE,
-    N_PERM,
+    band_pairs,
     connected_components,
     minhash_signature_col,
+    signature_format,
+    verify_pairs,
 )
 from ..operators.text import quality_features, quality_score_col
 from .pipeline import write_counted
 
 __all__ = [
-    "band_keys",
-    "band_pairs",
     "dedup_components_frame",
     "dedup_survivors_frame",
-    "estimated_jaccard_col",
     "run_dedup_pipeline",
     "stage_documents",
-    "verify_pairs",
 ]
 
 
@@ -80,119 +77,6 @@ def stage_documents(
         minhash_signature_col(F.col(text), k=k).alias("mh"),
         F.col("q_tokens").alias("n_tokens"),
         quality_score_col().alias("quality_keep"),
-    )
-
-
-def band_keys(
-    df: DataFrame, *, id_col: str = "doc_id", sig: str = "mh"
-) -> DataFrame:
-    """Explode staged signatures into their LSH band keys:
-    ``(id_col, band, key)`` with one row per (document, band). The
-    shared banding layout for every band join (batch pipeline,
-    streaming) — ONE definition so batch and stream can never disagree
-    on which documents collide."""
-    n_bands = N_PERM // BAND_SIZE
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.slice(F.col(sig), b * BAND_SIZE + 1, BAND_SIZE).alias("key"),
-        )
-        for b in range(n_bands)
-    ]
-    return df.select(
-        F.col(id_col), F.explode(F.array(*bands)).alias("bk")
-    ).select(id_col, "bk.band", "bk.key")
-
-
-def band_pairs(
-    staged: DataFrame, *, id_col: str = "doc_id", sig: str = "mh"
-) -> DataFrame:
-    """LSH candidate pairs from staged signatures: documents agreeing
-    on any (band, band-values) key; returns distinct (id_a, id_b),
-    id_a < id_b — bucketed equi-join, never all-pairs.
-
-    Documents with IDENTICAL full signatures collapse to their min-id
-    canon before banding: an n-member family of signature-identical
-    documents (near-identical contents — exact duplicates were already
-    collapsed upstream, but e.g. n copies differing only in a rare
-    shingle still share all 16 minima) would otherwise meet itself in
-    every band and emit O(n²) pairs. Each member instead emits one
-    star pair to the canon, and only canons enter the band join — the
-    same linear-in-family-size shape the exact-duplicate collapse
-    gives, one groupBy on the signature deeper. Candidate-set
-    semantics are preserved up to connected components: star pairs
-    keep the family connected, and any cross pair a member would have
-    produced is produced by its canon (identical signature ⇒ identical
-    band keys)."""
-    sigs = staged.select(F.col(id_col), F.col(sig))
-    canon = sigs.groupBy(sig).agg(F.min(id_col).alias("_canon"))
-    # materialized once (lazily): three branches consume it (star pairs
-    # + both sides of the band self-join) — without the cut each branch
-    # would recompute the full-corpus canon aggregate+join
-    with_canon = sigs.join(canon, on=sig).localCheckpoint(eager=False)
-    star = with_canon.filter(F.col(id_col) != F.col("_canon")).select(
-        F.col("_canon").alias("id_a"), F.col(id_col).alias("id_b")
-    )
-    reps = with_canon.filter(F.col(id_col) == F.col("_canon")).drop("_canon")
-
-    banded = band_keys(reps, id_col=id_col, sig=sig)
-    left, right = banded.alias("l"), banded.alias("r")
-    cross = (
-        left.join(
-            right,
-            on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.key") == F.col("r.key"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
-            ],
-        )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    # star pairs are already distinct (one row per non-canon member) and
-    # disjoint from cross pairs (non-canon ids never enter the band join)
-    return cross.unionByName(star)
-
-
-def estimated_jaccard_col(sig_a, sig_b) -> "F.Column":
-    """Unbiased LSH Jaccard estimate: the fraction of the N_PERM
-    minhash values on which the two signatures agree.
-
-    Unrolled to N_PERM static element comparisons — fully
-    whole-stage-codegen'd JVM arithmetic. The ``zip_with``/``aggregate``
-    form interprets its lambda per element (16 interpreted calls per
-    candidate pair — the verify stage runs over every pair the band
-    join emits, so at corpus scale this is a hot path)."""
-    total = None
-    for i in range(N_PERM):
-        term = (sig_a[i] == sig_b[i]).cast("int")
-        total = term if total is None else total + term
-    return total / F.lit(N_PERM)
-
-
-def verify_pairs(
-    candidates: DataFrame,
-    staged: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    min_est_jaccard: float = 0.5,
-) -> DataFrame:
-    """Signature-estimate verification of candidate pairs: pure column
-    arithmetic over the staged signatures — the text column is never
-    touched. Pairs below ``min_est_jaccard`` are dropped."""
-    sig = staged.select(F.col(id_col), F.col("mh"))
-    return (
-        candidates.join(
-            sig.select(F.col(id_col).alias("id_a"), F.col("mh").alias("_ma")),
-            on="id_a",
-        )
-        .join(
-            sig.select(F.col(id_col).alias("id_b"), F.col("mh").alias("_mb")),
-            on="id_b",
-        )
-        .withColumn("est_jaccard", estimated_jaccard_col(F.col("_ma"), F.col("_mb")))
-        .filter(F.col("est_jaccard") >= min_est_jaccard)
-        .select("id_a", "id_b", "est_jaccard")
     )
 
 
@@ -288,10 +172,16 @@ def run_dedup_pipeline(
     aggregate over the persisted winners — never from a read-back."""
     t0 = time.perf_counter()
     staged_path = f"{out_dir}/staged"
-    if not (resume and fs_exists(spark, f"{staged_path}/_SUCCESS")):
+    # the recipe of the last COMPLETED staging: removed before a
+    # restage and written after it, so it always describes staged/
+    marker = f"{out_dir}/staged.json"
+    recipe = signature_format(k)
+    if not (resume and fs_read_json(spark, marker) == recipe):
+        fs_delete(spark, marker)
         stage_documents(docs, text=text, id_col=id_col, k=k).write.mode(
             "overwrite"
         ).parquet(staged_path)
+        fs_write_json(spark, marker, recipe)
     staged = spark.read.parquet(staged_path)
 
     # exact dedup first: one winner per content hash; near-dup stages

@@ -138,7 +138,7 @@ def _collapsed_pairs_body() -> str:
     ``xpair(id_a, id_b)``: the signature-family collapse (min-id canon
     per full signature, one star pair per member) followed by the band
     join over canons only — mirroring
-    operators.dedup.minhash_candidate_pairs exactly."""
+    operators.dedup.collapse_signature_families and band_pairs exactly."""
     sig_cols = ", ".join(f"mh{i}" for i in range(N_PERM))
     sig_eq = " AND ".join(f"s.mh{i} = c.mh{i}" for i in range(N_PERM))
     band_selects, join_cond = _band_sql_parts("reps")

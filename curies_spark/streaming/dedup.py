@@ -46,9 +46,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..plans.dedup_pipeline import band_keys, estimated_jaccard_col
-from ..plans.dedup_pipeline import stage_documents as _stage
 from ..fsio import fs_delete, fs_exists, fs_read_json, fs_write_json, partition_ids
+from ..operators.dedup import (
+    band_keys,
+    band_self_pairs,
+    collapse_signature_families,
+    signature_format,
+    verify_pairs,
+)
+from ..plans.dedup_pipeline import stage_documents as _stage
 
 __all__ = [
     "DOC_SCHEMA",
@@ -71,28 +77,6 @@ DOC_SCHEMA = StructType(
 _STORE_COLS = ("doc_id", "mh", "content_hash")
 
 
-def _signature_format(k: int) -> dict:
-    """The exact signature recipe this engine version computes, as a
-    comparable dict: tokenizer whitespace set, shingle k, permutation
-    constants, band geometry. Any change to any of these silently
-    changes MinHash signatures — a resumed stream would then
-    under-pair against its pre-change store."""
-    import hashlib
-
-    from ..operators.dedup import _R, BAND_SIZE, N_PERM
-    from ..operators.text import WS_CHARS
-
-    return {
-        "ws_sha": hashlib.sha256(WS_CHARS.encode("utf-8")).hexdigest()[:16],
-        "k": k,
-        "n_perm": N_PERM,
-        "band_size": BAND_SIZE,
-        "perm_sha": hashlib.sha256(
-            ",".join(map(str, _R)).encode("utf-8")
-        ).hexdigest()[:16],
-    }
-
-
 def _check_signature_format(spark: SparkSession, out_dir: str, *, k: int) -> None:
     """Fail-loud guard for the store's signature compatibility: a store
     written under a DIFFERENT tokenizer class / shingle k / permutation
@@ -103,7 +87,7 @@ def _check_signature_format(spark: SparkSession, out_dir: str, *, k: int) -> Non
     import json
 
     marker = f"{out_dir}/_signature.json"
-    fmt = _signature_format(k)
+    fmt = signature_format(k)
     recorded = fs_read_json(spark, marker)
     if recorded == fmt:
         return
@@ -251,19 +235,8 @@ def _near_pairs(
     the batch side is broadcast (when under ``BROADCAST_NOVEL_CAP``),
     so the store is SCANNED once per batch but never shuffled."""
     batch_banded = band_keys(novel).localCheckpoint(eager=False)
-    left, right = batch_banded.alias("l"), batch_banded.alias("r")
-    within = (
-        left.join(
-            right,
-            on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.key") == F.col("r.key"),
-                F.col("l.doc_id") < F.col("r.doc_id"),
-            ],
-        )
-        .select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
-        .distinct()
-    )
+    pairs = band_self_pairs(batch_banded, id_col="doc_id")
+    sig = novel.select("doc_id", "mh")
     if store is not None:
         store_banded = band_keys(store).alias("s")
         b = batch_banded.alias("b")
@@ -283,24 +256,12 @@ def _near_pairs(
             )
             .distinct()
         )
-        pairs = within.unionByName(cross)
-        sig = novel.select("doc_id", "mh").unionByName(store.select("doc_id", "mh"))
-    else:
-        pairs = within
-        sig = novel.select("doc_id", "mh")
-    return (
-        pairs.filter(F.col("id_a") != F.col("id_b"))
-        .join(
-            sig.select(F.col("doc_id").alias("id_a"), F.col("mh").alias("_ma")),
-            on="id_a",
-        )
-        .join(
-            sig.select(F.col("doc_id").alias("id_b"), F.col("mh").alias("_mb")),
-            on="id_b",
-        )
-        .withColumn("est_jaccard", estimated_jaccard_col(F.col("_ma"), F.col("_mb")))
-        .filter(F.col("est_jaccard") >= min_est_jaccard)
-        .select("id_a", "id_b", "est_jaccard")
+        pairs = pairs.unionByName(cross)
+        sig = sig.unionByName(store.select("doc_id", "mh"))
+    return verify_pairs(
+        pairs.filter(F.col("id_a") != F.col("id_b")),
+        sig,
+        min_est_jaccard=min_est_jaccard,
     )
 
 
@@ -313,27 +274,17 @@ def _pair_batch(
     """Returns (pairs, novel): the batch's duplicate pairs and the
     signature-novel staged rows to append to the store.
 
-    Signature-identical documents — which include every exact-duplicate
-    family, since identical contents hash to identical signatures —
-    collapse BEFORE the band join: banding an n-member family directly
-    is quadratic in n (a document repeated 10^6 times would emit ~10^12
-    band pairs). Each batch member instead emits ONE star pair
-    (est_jaccard = 1.0: full signature agreement) to its family's
-    canonical id — the min batch id, or the store's holder when the
-    signature is already stored — and only signature-novel documents
-    enter the band join and the store. Candidate connectivity is
-    preserved: a collapsed member's band keys are exactly its canon's,
-    so every cross pair it would have found, its canon finds."""
-    # within-batch signature collapse: min doc_id per full signature
-    canon = staged_batch.groupBy("mh").agg(F.min("doc_id").alias("_canon"))
-    with_canon = staged_batch.join(canon, on="mh")
-    batch_star = with_canon.filter(F.col("doc_id") != F.col("_canon")).select(
-        F.col("_canon").alias("id_a"),
-        F.col("doc_id").alias("id_b"),
-        F.lit(1.0).alias("est_jaccard"),
+    Signature families collapse before the band join
+    (:func:`~curies_spark.operators.dedup.collapse_signature_families`):
+    each batch member emits ONE star pair (est_jaccard = 1.0: full
+    signature agreement) to its family's canon — the min batch id, or
+    the store's holder when the signature is already stored — and only
+    signature-novel documents enter the band join and the store."""
+    batch_star, winners = collapse_signature_families(
+        staged_batch, id_col="doc_id", sig="mh"
     )
-    winners = with_canon.filter(F.col("doc_id") == F.col("_canon")).drop("_canon")
-
+    star_pairs = batch_star.withColumn("est_jaccard", F.lit(1.0))
+    novel = winners
     if store is not None:
         # winners whose signature already lives in the store: one pair
         # to the store's holder (≤ 1 row per signature by this very
@@ -350,11 +301,7 @@ def _pair_batch(
             F.lit(1.0).alias("est_jaccard"),
         )
         novel = winners.join(store_sigs, on="mh", how="left_anti")
-        star_pairs = batch_star.unionByName(store_star)
-    else:
-        novel = winners
-        star_pairs = batch_star
-
+        star_pairs = star_pairs.unionByName(store_star)
     novel = novel.localCheckpoint()
     near = _near_pairs(
         novel, store, min_est_jaccard=min_est_jaccard, n_novel=novel.count()

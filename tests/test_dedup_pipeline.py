@@ -10,6 +10,7 @@ import json
 import pytest
 from pyspark.sql import Row, functions as F
 
+from curies_spark.operators.dedup import band_pairs, estimated_jaccard_col
 from curies_spark.plans import dedup_pipeline as P
 
 
@@ -98,12 +99,41 @@ def test_resume_skips_staging(spark, corpus, tmp_path, monkeypatch):
         P.run_dedup_pipeline(spark, corpus, out, resume=False)
 
 
+def test_resume_restages_on_new_shingle_k(spark, tmp_path):
+    """A resume under a different signature recipe (here the shingle k)
+    restages instead of banding the signatures staged for the old one."""
+    import random
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(400)]
+    rows = []
+    for family in range(18):
+        base = [rng.choice(vocab) for _ in range(30)]
+        for edits in range(5):
+            toks = list(base)
+            for _ in range(edits):
+                toks[rng.randrange(len(toks))] = rng.choice(vocab)
+            rows.append(Row(doc_id=family * 10 + edits, text=" ".join(toks)))
+    docs = spark.createDataFrame(rows)
+
+    def counts(manifest):
+        keys = ("candidate_pairs", "verified_pairs", "clustered_docs", "survivors")
+        return {key: manifest[key] for key in keys}
+
+    out = str(tmp_path / "resume")
+    k3 = P.run_dedup_pipeline(spark, docs, out, k=3)
+    resumed = P.run_dedup_pipeline(spark, docs, out, k=5, resume=True)
+    fresh = P.run_dedup_pipeline(spark, docs, str(tmp_path / "fresh"), k=5)
+    assert counts(k3) != counts(fresh)  # the two recipes pair differently
+    assert counts(resumed) == counts(fresh)
+
+
 def test_estimator_matches_hand_count(spark):
     df = spark.createDataFrame(
         [Row(a=[1, 2, 3, 4] * 4, b=[1, 2, 3, 9] * 4)]
     )
     got = df.select(
-        P.estimated_jaccard_col(F.col("a"), F.col("b")).alias("e")
+        estimated_jaccard_col(F.col("a"), F.col("b")).alias("e")
     ).first()["e"]
     assert got == pytest.approx(12 / 16)
 
@@ -117,7 +147,7 @@ def test_band_pairs_signature_family_is_linear(spark):
     rows = [Row(doc_id=i, mh=sig) for i in range(1, 1001)]
     rows.append(Row(doc_id=5000, mh=other))
     staged = spark.createDataFrame(rows)
-    pairs = P.band_pairs(staged).collect()
+    pairs = band_pairs(staged).collect()
     assert len(pairs) == 999
     assert all(r["id_a"] == 1 and r["id_b"] != 1 for r in pairs)
 
@@ -209,7 +239,7 @@ def test_family_collapse_preserves_components(spark):
         staged = spark.createDataFrame(
             [Row(doc_id=d, mh=s) for d, s in sigs.items()]
         )
-        got = {(r["id_a"], r["id_b"]) for r in P.band_pairs(staged).collect()}
+        got = {(r["id_a"], r["id_b"]) for r in band_pairs(staged).collect()}
         legacy = {
             (a, b)
             for a in range(n)
@@ -258,7 +288,7 @@ def test_manifest_counts_match_readback(spark, corpus, tmp_path):
         "staged_docs": staged.count(),
         "exact_dup_groups_gt1": groups.filter(F.col("count") > 1).count(),
         "exact_winners": groups.count(),
-        "candidate_pairs": P.band_pairs(winners).count(),
+        "candidate_pairs": band_pairs(winners).count(),
         "verified_pairs": spark.read.parquet(f"{out}/pairs").count(),
         "clustered_docs": spark.read.parquet(f"{out}/clusters").count(),
         "survivors": spark.read.parquet(f"{out}/survivors").count(),

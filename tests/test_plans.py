@@ -11,11 +11,12 @@ are exercised by their own tests/benches instead.
 from __future__ import annotations
 
 import re
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -69,6 +70,11 @@ EXPECTATIONS = {
     "minhash_signature": (0, True, ["BatchEvalPython"]),
     "simhash_docs": (0, True, ["BatchEvalPython"]),
     "fingerprint": (2, True, ["BatchEvalPython"]),  # Arrow fingerprint kernel
+    # pair operators: the signature kernel and the family collapse sit
+    # behind the checkpoint cut; the visible shuffles are the two band
+    # sides + the distinct
+    "minhash_pairs": (3, False, []),
+    "simhash_pairs": (3, False, []),
     # metadata scans prune the binary payload (rule 7)
     "media_metadata": (0, False, ["payload"]),
     # text analysis is JVM-native
@@ -158,7 +164,7 @@ def test_band_pairs_shuffles_signatures_not_text(spark):
     distinct — three, not one per consuming branch."""
     from pyspark.sql import Row
 
-    from curies_spark.plans.dedup_pipeline import band_pairs
+    from curies_spark.operators.dedup import band_pairs
 
     staged = spark.createDataFrame(
         [Row(doc_id=1, mh=[1] * 16), Row(doc_id=2, mh=[2] * 16)]

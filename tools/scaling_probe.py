@@ -2,10 +2,11 @@
 
 Usage: python tools/scaling_probe.py <cpus> <n_files>
 """
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 cpus = int(sys.argv[1])
 n_files = int(sys.argv[2])
